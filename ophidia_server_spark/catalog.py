@@ -9,6 +9,9 @@ as plain DataFrames/tables:
   metadata(cube_id, key, value)
   lineage(out_cube, task, in_cube)
 
+`cube_id` is the key of `cubes` in every backend (filters.compile_group
+relies on it to skip a DISTINCT). The live CubeStore builds them as local
+relations (store.as_catalog), so its single-group expansions run no job.
 In production these are Delta/Parquet tables maintained by operator wrappers;
 they are tiny relative to the data (one row per cube) and always broadcast-
 joined against. For oracle-checked tests the catalog is *derived

@@ -28,6 +28,7 @@ executing (oph_massive_operations.c:151-153).
 from __future__ import annotations
 
 import re
+from functools import reduce
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -120,6 +121,8 @@ def compile_group(cat: Catalog, kv: dict[str, str]) -> DataFrame:
     Predicates AND-combine across keys (the reference emits one WHERE
     conjunction). Session scoping: path filters are prefixed with the session
     prefix (oph_filters.c:576-601) — enforced here for every query.
+    `cube_id` keys `cat.cubes` and filters/semi-joins never duplicate a row,
+    so no DISTINCT is needed (over CubeStore's local relations: no job).
     """
     df = cat.cubes
     # every catalog query is session-scoped (oph_filters.c:576-601): cubes
@@ -209,7 +212,7 @@ def compile_group(cat: Catalog, kv: dict[str, str]) -> DataFrame:
             # every listed key must exist for the cube (AND-combined,
             # oph_filters.c:307-369); negation: none may exist
             for k in value.split("|"):
-                hit = cat.metadata.filter(F.col("key") == k).select("cube_id").distinct()
+                hit = cat.metadata.filter(F.col("key") == k).select("cube_id")
                 df = df.join(F.broadcast(hit), "cube_id", "left_anti" if neg else "left_semi")
         elif key == "metadata_value":
             keys = kv.get("metadata_key", "").split("|") if kv.get("metadata_key") else [None]
@@ -218,17 +221,17 @@ def compile_group(cat: Catalog, kv: dict[str, str]) -> DataFrame:
                 cond = F.col("value").contains(v)
                 if k:
                     cond = cond & (F.col("key") == k)
-                hit = cat.metadata.filter(cond).select("cube_id").distinct()
+                hit = cat.metadata.filter(cond).select("cube_id")
                 df = df.join(F.broadcast(hit), "cube_id", "left_anti" if neg else "left_semi")
         elif key not in _KNOWN:
             # free key=value -> metadata LIKE filter (oph_filters.c:545-555)
             hit = cat.metadata.filter(
                 (F.col("key") == key) & F.col("value").contains(value)
-            ).select("cube_id").distinct()
+            ).select("cube_id")
             df = df.join(F.broadcast(hit), "cube_id", "left_anti" if neg else "left_semi")
     if pred is not None:
         df = df.filter(pred)
-    return df.select("cube_id").distinct()
+    return df.select("cube_id")
 
 
 def compile_massive(cat: Catalog, arg: str) -> DataFrame:
@@ -245,7 +248,8 @@ def _finish_expansion(spark, parts: list[DataFrame], pids: list[str],
     """Shared expansion tail for both catalog backends: explicit PIDs
     union in as literal ids, empty expansions are caller errors, and the
     result is DISTINCT cube_ids — `SELECT DISTINCT datacube.iddatacube`
-    (oph_filters.c:718-721) either way."""
+    (oph_filters.c:718-721) either way. A lone group is already distinct
+    (compile_group), so only a combination of parts pays for the DISTINCT."""
     if pids:
         ids = [pid_cube_id(p) for p in pids]
         parts = parts + [
@@ -253,10 +257,8 @@ def _finish_expansion(spark, parts: list[DataFrame], pids: list[str],
         ]
     if not parts:
         raise ValueError(f"empty massive argument {arg!r}")
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out.distinct()
+    out = reduce(DataFrame.unionByName, parts)
+    return out if len(parts) == 1 and not pids else out.distinct()
 
 
 # --- Snapshot-backed compilation (round 10) ---------------------------------

@@ -122,8 +122,8 @@ def get_spark(app_name: str = "ophidia_server_spark", shuffle_partitions: str | 
         # directories; the at-most-once guarantee we give up only matters for
         # speculative execution, which is off
         .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
-        # driver testdata uses parquet TIMESTAMP(NANOS); read as int64 nanos and
-        # convert in load_tables (Spark has no native nanos timestamp)
+        # a parquet TIMESTAMP(NANOS) source reads as int64 nanos, converted in
+        # load_tables (no native nanos timestamp); testdata is TIMESTAMP(MICROS)
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         # reliable-checkpoint retention (ckpt.py): without this, checkpoint
         # files written when a checkpoint dir is set are NEVER deleted —
@@ -140,10 +140,7 @@ def get_spark(app_name: str = "ophidia_server_spark", shuffle_partitions: str | 
         # not interactive notebooks, so the production default is off;
         # SPARK_GRAFT_DF_DEBUGGING=true restores call-site context when
         # debugging a query interactively.
-        .config(
-            "spark.python.sql.dataFrameDebugging.enabled",
-            os.environ.get("SPARK_GRAFT_DF_DEBUGGING", "false"),
-        )
+        .config("spark.python.sql.dataFrameDebugging.enabled", _df_debugging())
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )
@@ -157,6 +154,16 @@ def get_spark(app_name: str = "ophidia_server_spark", shuffle_partitions: str | 
     return spark
 
 
+def _df_debugging() -> str:
+    """SPARK_GRAFT_DF_DEBUGGING as the 'true'/'false' Spark accepts (it reads
+    any other value as off); an unknown spelling is an error, not 'off'."""
+    raw = os.environ.get("SPARK_GRAFT_DF_DEBUGGING", "false")
+    v = raw.strip().lower()
+    if v not in ("true", "1", "yes", "on", "false", "0", "no", "off"):
+        raise ValueError(f"SPARK_GRAFT_DF_DEBUGGING={raw!r}: expected true/false/1/0/yes/no/on/off")
+    return "true" if v in ("true", "1", "yes", "on") else "false"
+
+
 def load_tables(spark: SparkSession, sf_dir: str, names: tuple[str, ...] | None = None):
     """Load the driver parquet tables as a dict of DataFrames and register temp views."""
     names = names or (
@@ -164,9 +171,9 @@ def load_tables(spark: SparkSession, sf_dir: str, names: tuple[str, ...] | None 
         "orders", "lineitem", "events", "documents", "embeddings",
     )
     # The driver may hand us a session built without these confs; both are
-    # runtime-settable. nanosAsLong unlocks the generator's TIMESTAMP(NANOS)
-    # parquet columns (read as timestamp_ntz on Spark 4); UTC keeps derived
-    # calendar fields aligned with the DuckDB oracle.
+    # runtime-settable. nanosAsLong lets a TIMESTAMP(NANOS) parquet source
+    # load (the testdata is TIMESTAMP(MICROS) and does not need it); UTC
+    # keeps derived calendar fields aligned with the DuckDB oracle.
     try:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         spark.conf.set("spark.sql.session.timeZone", "UTC")
@@ -193,8 +200,8 @@ def load_tables(spark: SparkSession, sf_dir: str, names: tuple[str, ...] | None 
     return out
 
 
-# columns written as parquet TIMESTAMP(NANOS) by the data generator; with
-# nanosAsLong=true they surface as bigint and are converted above.
+# timestamp columns: parquet TIMESTAMP(MICROS) in the testdata, read natively;
+# a TIMESTAMP(NANOS) source surfaces as bigint (nanosAsLong) and converts above.
 _NANOS_TS_COLS = {
     "lineitem": (("l_shipdate", True),),
     "orders": (("o_orderdate", True),),

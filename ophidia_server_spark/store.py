@@ -3,8 +3,10 @@
 The reference keeps cubes/containers/folders/metadata/provenance in MySQL
 (/root/reference/src/oph_ophidiadb_query.h) and fragments on I/O nodes; here
 cube payloads are parquet directories under a workspace and the catalog is
-driver-side state exposed as DataFrames (tiny — one row per cube — and
-always broadcast when joined against data).
+driver-side state, exposed by `as_catalog` as DataFrames over local
+relations whose cubes table is keyed by `cube_id` (filters.compile_group
+relies on that key). The httpd farm's workflow threads share one store, so
+id allocation, entry/metadata/lineage mutation and snapshots hold `_lock`.
 
 Covers the lifecycle operator surface: importcsv/importparquet (oph_importnc
 analogue for the containerized environment — see io_ops for the NetCDF
@@ -19,8 +21,10 @@ from __future__ import annotations
 
 import os
 import shutil
+import threading
 from dataclasses import dataclass, field
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -52,6 +56,7 @@ class CubeStore:
     metadata: dict[int, dict[str, str]] = field(default_factory=dict)
     lineage: list[tuple[int, str, int]] = field(default_factory=list)  # (out, task, in)
     folders: set[str] = field(default_factory=set)
+    _lock: threading.Lock = field(default_factory=threading.Lock, repr=False, compare=False)
 
     # -- containers / folders -------------------------------------------------
     def createcontainer(self, container: str, path: str = "/") -> str:
@@ -75,7 +80,7 @@ class CubeStore:
             moved = {f for f in self.folders if f == full or f.startswith(full + "/")}
             self.folders -= moved
             self.folders |= {dest + f[len(full):] for f in moved}
-            for e in self.entries.values():
+            for e in self._snapshot():
                 if e.path == full or e.path.startswith(full + "/"):
                     e.path = dest + e.path[len(full):]
         else:
@@ -86,7 +91,7 @@ class CubeStore:
         container to another folder."""
         dest = self._scoped(to_path)
         found = False
-        for e in self.entries.values():
+        for e in self._snapshot():
             if e.container == container:
                 e.path = dest
                 found = True
@@ -98,7 +103,7 @@ class CubeStore:
         """oph_restorecontainer (oph_json_objkeys.h:126): bring back a
         soft-deleted (trashed) container's cubes. Returns restored count."""
         n = 0
-        for e in self.entries.values():
+        for e in self._snapshot():
             if e.container == container and e.path.startswith(self._trash_prefix()):
                 e.path = e.path[len(self._trash_prefix()):] or "/"
                 if not e.path.startswith(self.session_prefix):
@@ -113,11 +118,15 @@ class CubeStore:
         prefix (the reference's deletecontainer keeps a restorable copy the
         restorecontainer operator recovers)."""
         n = 0
-        for e in self.entries.values():
+        for e in self._snapshot():
             if e.container == container and not e.path.startswith(self._trash_prefix()):
                 e.path = self._trash_prefix() + e.path
                 n += 1
         return n
+
+    def _snapshot(self) -> list[CubeEntry]:
+        with self._lock:
+            return list(self.entries.values())
 
     def _trash_prefix(self) -> str:
         return self.session_prefix + "/.trash"
@@ -140,8 +149,7 @@ class CubeStore:
         task: str = "import",
         materialize: bool = False,
     ) -> str:
-        cid = self._next_id
-        self._next_id += 1
+        cid = self._new_id()
         pid = f"{self.base_url}/{container}/{cid}"
         storage = None
         if materialize:
@@ -159,10 +167,17 @@ class CubeStore:
             storage=storage,
             cube=None if materialize else cube,
         )
-        self.entries[pid] = entry
-        for p in parents or []:
-            self.lineage.append((cid, task, self.entries[p].cube_id))
+        with self._lock:
+            self.entries[pid] = entry
+            for p in parents or []:
+                self.lineage.append((cid, task, self.entries[p].cube_id))
         return pid
+
+    def _new_id(self) -> int:
+        with self._lock:
+            cid = self._next_id
+            self._next_id += 1
+        return cid
 
     def register_bucketed(self, cube: Cube, container: str, n_buckets: int = 16,
                           path: str = "/", table_prefix: str = "cube_b") -> str:
@@ -172,8 +187,7 @@ class CubeStore:
         intercube/mergecubes pipelines at scale (bucket count picked per
         deployment; 16 locally). Returns the PID; the entry's `storage` holds
         the table name prefixed with 'table:'."""
-        cid = self._next_id
-        self._next_id += 1
+        cid = self._new_id()
         pid = f"{self.base_url}/{container}/{cid}"
         tbl = f"{table_prefix}_{cid}"
         (
@@ -183,13 +197,15 @@ class CubeStore:
             .option("path", os.path.join(self.workspace, tbl))
             .saveAsTable(tbl)
         )
-        self.entries[pid] = CubeEntry(
+        entry = CubeEntry(
             pid=pid, cube_id=cid, container=container,
             path=self._scoped(path).rstrip("/") + "/" + container,
             level=cube.level, measure=cube.measure,
             explicit_dims=cube.explicit_dims, implicit_dims=cube.implicit_dims,
             storage=f"table:{tbl}", cube=None,
         )
+        with self._lock:
+            self.entries[pid] = entry
         return pid
 
     def importcsv(
@@ -237,28 +253,33 @@ class CubeStore:
 
     def delete(self, pid: str) -> None:
         """oph_delete (oph_json_objkeys.h:105): drop storage + catalog row."""
-        e = self.entries.pop(pid)
-        self.metadata.pop(e.cube_id, None)
+        with self._lock:
+            e = self.entries.pop(pid)
+            self.metadata.pop(e.cube_id, None)
         if e.storage and os.path.isdir(e.storage):
             shutil.rmtree(e.storage)
 
     def deletecontainer(self, container: str) -> int:
         """oph_deletecontainer (oph_json_objkeys.h:107): drop all cubes in it."""
-        pids = [p for p, e in self.entries.items() if e.container == container]
+        with self._lock:
+            pids = [p for p, e in self.entries.items() if e.container == container]
         for p in pids:
             self.delete(p)
         return len(pids)
 
     # -- metadata (oph_metadata, oph_json_objkeys.h:132-133) ------------------
     def metadata_put(self, pid: str, key: str, value: str) -> None:
-        self.metadata.setdefault(self.entries[pid].cube_id, {})[key] = value
+        with self._lock:
+            self.metadata.setdefault(self.entries[pid].cube_id, {})[key] = value
 
     def metadata_get(self, pid: str, key: str | None = None):
-        kv = self.metadata.get(self.entries[pid].cube_id, {})
+        with self._lock:
+            kv = dict(self.metadata.get(self.entries[pid].cube_id, {}))
         return kv if key is None else kv.get(key)
 
     def metadata_delete(self, pid: str, key: str) -> None:
-        self.metadata.get(self.entries[pid].cube_id, {}).pop(key, None)
+        with self._lock:
+            self.metadata.get(self.entries[pid].cube_id, {}).pop(key, None)
 
     # -- introspection --------------------------------------------------------
     def cubeschema(self, pid: str) -> dict:
@@ -324,14 +345,15 @@ class CubeStore:
             for f in sorted(self.folders):
                 if f.startswith(scope):
                     out.append({"type": "folder", "path": f})
+        entries = self._snapshot()
         if level >= 1:
             seen = set()
-            for e in self.entries.values():
+            for e in entries:
                 if e.container not in seen and e.path.startswith(scope):
                     seen.add(e.container)
                     out.append({"type": "container", "container": e.container, "path": e.path})
         if level >= 2:
-            for e in self.entries.values():
+            for e in entries:
                 if e.path.startswith(scope):
                     out.append(
                         {"type": "cube", "pid": e.pid, "container": e.container,
@@ -361,34 +383,33 @@ class CubeStore:
 
     # -- catalog as DataFrames (for the massive-filter compiler) ---------------
     def as_catalog(self):
+        """Snapshot the catalog as local relations (Arrow tables Spark plans
+        as LocalRelation): compile_group's filters and projections fold on
+        the driver, so a single-group expansion collects with no Spark job."""
         from ophidia_server_spark.catalog import Catalog
 
-        cube_rows = [
-            (e.cube_id, 0, e.container, e.path, e.level, e.measure)
-            for e in self.entries.values()
-        ]
-        md_rows = [
-            (cid, k, v) for cid, kv in self.metadata.items() for k, v in kv.items()
-        ]
-        lin_rows = list(self.lineage)
-        cubes = self.spark.createDataFrame(
-            cube_rows or [(0, 0, "", "", 0, "")],
-            "cube_id long, container_id long, container string, path string, level long, measure string",
-        )
-        if not cube_rows:
-            cubes = cubes.filter(F.lit(False))
-        metadata = self.spark.createDataFrame(
-            md_rows or [(0, "", "")], "cube_id long, key string, value string"
-        )
-        if not md_rows:
-            metadata = metadata.filter(F.lit(False))
-        lineage = self.spark.createDataFrame(
-            lin_rows or [(0, "", 0)], "out_cube long, task string, in_cube long"
-        )
-        if not lin_rows:
-            lineage = lineage.filter(F.lit(False))
+        with self._lock:
+            cube_rows = [
+                (e.cube_id, 0, e.container, e.path, e.level, e.measure)
+                for e in self.entries.values()
+            ]
+            md_rows = [
+                (cid, k, v) for cid, kv in self.metadata.items() for k, v in kv.items()
+            ]
+            lin_rows = list(self.lineage)
+
+        def local(rows, **types) -> DataFrame:
+            cols = list(zip(*rows)) or [()] * len(types)
+            return self.spark.createDataFrame(pa.table(
+                [pa.array(c, t) for c, t in zip(cols, types.values())], names=list(types)
+            ))
+
+        i64, txt = pa.int64(), pa.string()
         return Catalog(
-            cubes=cubes, metadata=metadata, lineage=lineage,
+            cubes=local(cube_rows, cube_id=i64, container_id=i64, container=txt,
+                        path=txt, level=i64, measure=txt),
+            metadata=local(md_rows, cube_id=i64, key=txt, value=txt),
+            lineage=local(lin_rows, out_cube=i64, task=txt, in_cube=i64),
             session_prefix=self.session_prefix,
         )
 

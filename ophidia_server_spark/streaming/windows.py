@@ -15,7 +15,7 @@ real streaming path with Trigger.AvailableNow.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 TS_FMT = "yyyy-MM-dd HH:mm:ss"
@@ -102,11 +102,9 @@ def sessionize(
     if skew_bucket is not None:
         return _sessionize_bucketed(df, gap_minutes, skew_bucket)
     w = Window.partitionBy("user_id").orderBy("ts")
-    # cast through TIMESTAMP so TIMESTAMP_NTZ parquet columns work (NTZ->BIGINT
-    # is not a legal direct cast in Spark 4)
-    ts_long = F.col("ts").cast("timestamp").cast("long")
-    gap = ts_long - F.lag(ts_long).over(w)
-    new_sess = F.when(gap.isNull() | (gap > gap_minutes * 60), 1).otherwise(0)
+    ts_us = _micros("ts")
+    gap = ts_us - F.lag(ts_us).over(w)
+    new_sess = F.when(gap.isNull() | (gap > gap_minutes * 60_000_000), 1).otherwise(0)
     sess_id = F.sum(new_sess).over(
         Window.partitionBy("user_id").orderBy("ts").rowsBetween(Window.unboundedPreceding, 0)
     )
@@ -122,17 +120,24 @@ def sessionize(
     )
 
 
+def _micros(col: str) -> Column:
+    """Event time in microseconds: the gap test compares at the source's
+    own resolution, so a gap within a second of the limit is not rounded
+    across it. Cast through TIMESTAMP so TIMESTAMP_NTZ columns work
+    (NTZ->BIGINT is not a legal direct cast in Spark 4)."""
+    return F.unix_micros(F.col(col).cast("timestamp"))
+
+
 def _sessionize_bucketed(df: DataFrame, gap_minutes: int, bucket: str) -> DataFrame:
     """Two-level sessionize (see sessionize docstring): stage 1 shuffles on
     (user_id, bucket) and builds bucket-local sessions; stage 2 merges the
     summaries whose boundary gap is within the threshold. sum_value stays
     unrounded until the final merge so the result matches the plain path."""
-    ts = F.col("ts").cast("timestamp")
-    ts_long = ts.cast("long")
-    b = F.date_trunc(bucket, ts).alias("__b")
+    ts_us = _micros("ts")
+    b = F.date_trunc(bucket, F.col("ts").cast("timestamp")).alias("__b")
     w1 = Window.partitionBy("user_id", "__b").orderBy("ts")
-    gap1 = ts_long - F.lag(ts_long).over(w1)
-    new1 = F.when(gap1.isNull() | (gap1 > gap_minutes * 60), 1).otherwise(0)
+    gap1 = ts_us - F.lag(ts_us).over(w1)
+    new1 = F.when(gap1.isNull() | (gap1 > gap_minutes * 60_000_000), 1).otherwise(0)
     sess1 = F.sum(new1).over(w1.rowsBetween(Window.unboundedPreceding, 0))
     parts = (
         df.withColumn("__b", b)
@@ -146,10 +151,8 @@ def _sessionize_bucketed(df: DataFrame, gap_minutes: int, bucket: str) -> DataFr
         )
     )
     w2 = Window.partitionBy("user_id").orderBy("__start", "__end")
-    gap2 = F.col("__start").cast("timestamp").cast("long") - F.lag(
-        F.col("__end").cast("timestamp").cast("long")
-    ).over(w2)
-    new2 = F.when(gap2.isNull() | (gap2 > gap_minutes * 60), 1).otherwise(0)
+    gap2 = _micros("__start") - F.lag(_micros("__end")).over(w2)
+    new2 = F.when(gap2.isNull() | (gap2 > gap_minutes * 60_000_000), 1).otherwise(0)
     sess2 = F.sum(new2).over(w2.rowsBetween(Window.unboundedPreceding, 0))
     return (
         parts.withColumn("__g", sess2)

@@ -12,6 +12,8 @@ import subprocess
 import sys
 import zipfile
 
+import pytest
+
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
@@ -108,3 +110,25 @@ def test_advise_shuffle_partitions(spark, tables):
     assert advise_shuffle_partitions(mem) == int(
         spark.conf.get("spark.sql.shuffle.partitions")
     )
+
+
+@pytest.mark.parametrize("raw, want", [
+    (None, "false"), ("true", "true"), ("1", "true"), ("Yes", "true"), (" on ", "true"),
+    ("0", "false"), ("off", "false"), ("FALSE", "false"),
+])
+def test_df_debugging_env_normalized(monkeypatch, raw, want):
+    from ophidia_server_spark.session import _df_debugging
+
+    if raw is None:
+        monkeypatch.delenv("SPARK_GRAFT_DF_DEBUGGING", raising=False)
+    else:
+        monkeypatch.setenv("SPARK_GRAFT_DF_DEBUGGING", raw)
+    assert _df_debugging() == want
+
+
+def test_df_debugging_env_rejects_unknown(monkeypatch):
+    from ophidia_server_spark.session import _df_debugging
+
+    monkeypatch.setenv("SPARK_GRAFT_DF_DEBUGGING", "maybe")
+    with pytest.raises(ValueError, match="SPARK_GRAFT_DF_DEBUGGING"):
+        _df_debugging()

@@ -1,6 +1,7 @@
 """Salted join must be result-identical to the plain join while spreading any
 single key across n_salt shards."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from ophidia_server_spark.functions.skew import salted_join, skew_stats
@@ -77,6 +78,27 @@ def test_sessionize_bucketed_equals_plain_on_skew(spark):
     # the hot user's sessions span day boundaries -> the merge stage really ran
     hourly = {tuple(r) for r in sessionize(ev, gap_minutes=30, skew_bucket="hour").collect()}
     assert hourly == plain
+
+
+@pytest.mark.parametrize("skew_bucket", [None, "hour"])
+def test_sessionize_gap_at_microsecond_resolution(spark, skew_bucket):
+    # a gap of exactly 30 min stays in the session; 30 min + 0.5 s opens a
+    # new one (whole-second truncation used to merge it)
+    from datetime import datetime, timedelta
+
+    from ophidia_server_spark.streaming.windows import sessionize
+
+    t0 = datetime(2024, 3, 1, 10, 0, 0)
+    t1 = t0 + timedelta(seconds=1800)
+    t2 = t1 + timedelta(seconds=1800.5)
+    ev = spark.createDataFrame(
+        [(1, t0, 1.0), (1, t1, 2.0), (1, t2, 4.0)], "user_id long, ts timestamp, value double"
+    )
+    got = sorted(
+        (r.n_events, r.sum_value)
+        for r in sessionize(ev, gap_minutes=30, skew_bucket=skew_bucket).collect()
+    )
+    assert got == [(1, 4.0), (2, 3.0)]
 
 
 def test_asof_join_salted_equals_plain_on_skew(spark):

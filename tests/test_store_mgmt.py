@@ -92,6 +92,131 @@ def test_store_catalog_feeds_massive_filter(store):
     assert got == [st.entries[pid].cube_id]
 
 
+def _tiny_cube(spark):
+    return build_cube(
+        spark.range(4).select(F.col("id").alias("d"), F.col("id").alias("t")),
+        ["d"], "t", F.col("d").cast("double"), measure="m",
+    )
+
+
+def test_store_concurrent_register_distinct_ids(spark, tmp_path):
+    # the httpd farm shares one store across workflow threads: concurrent
+    # registers must get distinct cube_ids (the catalog key), and an
+    # as_catalog snapshot taken meanwhile must never see the dicts change
+    # size under its iteration (registrars run until ten snapshots overlap)
+    import sys
+    import threading
+
+    st = CubeStore(spark=spark, workspace=str(tmp_path))
+    cube = _tiny_cube(spark)
+    n_threads, n_snapshots = 8, 10
+    pids, errors = [], []
+    snapshots = []
+
+    def registrar(i):
+        try:
+            while len(snapshots) < n_snapshots and not errors:
+                pid = st.register(cube, f"c{i}")
+                st.metadata_put(pid, "k", "v")
+                pids.append(pid)
+        except Exception as exc:  # surfaced by the assertion below
+            errors.append(exc)
+
+    def snapshotter():
+        try:
+            while len(snapshots) < n_snapshots:
+                snapshots.append(st.as_catalog())
+        except Exception as exc:
+            errors.append(exc)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=registrar, args=(i,)) for i in range(n_threads)]
+        threads.append(threading.Thread(target=snapshotter))
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    assert errors == []
+    ids = [st.entries[p].cube_id for p in pids]
+    assert len(ids) == len(set(ids)) == len(st.entries)
+    assert len(st.metadata) == len(ids)
+
+
+@pytest.fixture()
+def live_store(spark, tmp_path):
+    st = CubeStore(spark=spark, workspace=str(tmp_path))
+    cube = _tiny_cube(spark)
+    pids = {}
+    for container, path in [("a", "/x"), ("a", "/x/y"), ("b", "/x"), ("b", "/z")]:
+        pid = st.register(cube, container, path=path)
+        pids[pid] = st.entries[pid]
+    for i, pid in enumerate(pids):
+        st.entries[pid].level = i % 2
+    return st, pids
+
+
+def _expand_jobs(spark, cat, arg, group):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, "massive expansion")
+    try:
+        ids = [r.cube_id for r in compile_massive(cat, arg).collect()]
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return ids, sc.statusTracker().getJobIdsForGroup(group)
+
+
+@pytest.mark.parametrize("arg", [
+    "[container=a]", "[level=1]", "[path=/x;recursive=yes]", "[container!=a;level=0]",
+])
+def test_live_store_single_group_expansion_runs_no_job(spark, live_store, arg):
+    st, entries = live_store
+    ids, jobs = _expand_jobs(spark, st.as_catalog(), arg, f"mf-local-{arg}")
+    assert jobs == []
+    want = {
+        "[container=a]": lambda e: e.container == "a",
+        "[level=1]": lambda e: e.level == 1,
+        "[path=/x;recursive=yes]": lambda e: e.path.startswith("/sess1/x/"),
+        "[container!=a;level=0]": lambda e: e.container != "a" and e.level == 0,
+    }[arg]
+    assert sorted(ids) == sorted(e.cube_id for e in entries.values() if want(e))
+
+
+def test_live_store_combined_expansion_returns_each_cube_once(spark, live_store):
+    st, entries = live_store
+    cat = st.as_catalog()
+    pid_a = next(p for p, e in entries.items() if e.container == "a")
+    in_a = {e.cube_id for e in entries.values() if e.container == "a"}
+    level_1 = {e.cube_id for e in entries.values() if e.level == 1}
+    for arg, want in [
+        ("[container=a]|[level=1]", in_a | level_1),
+        (f"[container=a]|{pid_a}", in_a),
+        (f"{pid_a}|{pid_a}", {entries[pid_a].cube_id}),
+    ]:
+        ids = [r.cube_id for r in compile_massive(cat, arg).collect()]
+        assert sorted(ids) == sorted(want)
+
+
+def test_live_store_empty_and_metadata_expansions(spark, live_store, tmp_path):
+    empty = CubeStore(spark=spark, workspace=str(tmp_path / "empty")).as_catalog()
+    assert compile_massive(empty, "[container=a]").collect() == []
+    assert compile_massive(empty, "[metadata_key=k]").collect() == []
+    st, entries = live_store
+    tagged = sorted(entries)[:2]
+    for pid in tagged:
+        st.metadata_put(pid, "k", "v")
+        st.metadata_put(pid, "k2", "v")
+    ids, jobs = _expand_jobs(spark, st.as_catalog(), "[metadata_key=k]", "mf-local-md")
+    assert sorted(ids) == sorted(entries[p].cube_id for p in tagged)
+    assert jobs  # a semi-join against metadata still runs a job
+    neg = [r.cube_id for r in compile_massive(st.as_catalog(), "[metadata_key!=k]").collect()]
+    assert sorted(neg) == sorted(e.cube_id for p, e in entries.items() if p not in tagged)
+
+
 # -- management shims ---------------------------------------------------------
 
 def test_manage_session_roundtrip(spark):
